@@ -178,6 +178,18 @@ object NetDiff {
     } else nettedHashable(before, after)
   }
 
+  /** The two fingerprint column names, chosen so neither matches an
+    * input column under Spark's case-insensitive resolution —
+    * `withColumn` would otherwise REPLACE a user column of that name and
+    * feed fingerprints into the output.
+    */
+  private def fpNames(cols: Seq[String]): (String, String) = {
+    val taken = cols.map(_.toLowerCase).toSet
+    def fresh(base: String): String =
+      Iterator.iterate(base)(_ + "_").find(n => !taken(n)).get
+    (fresh("_graft_fp1"), fresh("_graft_fp2"))
+  }
+
   /** ONE-SIDED multiset subtraction `a ∖ b` (exactly `a.exceptAll(b)`)
     * with the big side NEVER full-row-shuffled when `b` is small: rows
     * of `a` whose fingerprint appears nowhere in `b` cannot equal any
@@ -200,8 +212,7 @@ object NetDiff {
       hasMap(f.dataType) || hasVariant(f.dataType))
     if (!hashable) return a.exceptAll(b)
     val outCols = a.columns.toSeq
-    val fp1 = "_graft_fp1"
-    val fp2 = "_graft_fp2"
+    val (fp1, fp2) = fpNames(outCols)
     def withFp(df: DataFrame): DataFrame = {
       val cs: Seq[Column] = df.columns.toSeq.map(col)
       df.withColumn(fp1, xxhash64(cs: _*)).withColumn(fp2, hash(cs: _*))
@@ -237,8 +248,7 @@ object NetDiff {
   private def nettedHashable(
       before: DataFrame, after: DataFrame): DataFrame = {
     val outCols = before.columns.toSeq
-    val fp1 = "_graft_fp1"
-    val fp2 = "_graft_fp2"
+    val (fp1, fp2) = fpNames(outCols)
     def withFp(df: DataFrame): DataFrame = {
       val cs: Seq[Column] = df.columns.toSeq.map(col)
       df.withColumn(fp1, xxhash64(cs: _*)).withColumn(fp2, hash(cs: _*))

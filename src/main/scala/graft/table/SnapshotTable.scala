@@ -390,11 +390,10 @@ final class SnapshotTable(val root: Path,
     * file listing or footer reads for pruned partitions.
     *
     * Partitioned snapshots are written hive-style (`k=v` dirs), so the
-    * partition column values live in the path, not the files; reads group
-    * the file list by commit sequence and set `basePath` per group so
-    * Spark reconstructs the partition columns, then union the groups (a
-    * manifest can reference files from several snapshot dirs after a
-    * partition-scoped merge).
+    * partition column values live in the path, not the files; the read
+    * takes them from each manifest entry's partition map and plans ONE
+    * scan over every commit's files ([[ManifestFileIndex]]) — the
+    * manifest is the file list, no data directory is ever listed.
     */
   def read(spark: SparkSession,
            partitionFilter: Map[String, String] => Boolean = _ => true): DataFrame =
@@ -1593,8 +1592,8 @@ final class SnapshotTable(val root: Path,
           // position deletes: exact (path, pos) anti-join — tiny delete
           // relation, no version predicate needed (paths are unique per
           // commit and the masked rows' files carry those exact paths)
-          val pdels = spark.read.parquet(
-            plainPos.map(d => root.resolve(d.path).toString): _*)
+          val pdels = deleteScan(spark, plainPos, StructType(Seq(
+            StructField("path", StringType), StructField("pos", LongType))))
           base = base.alias("r").join(pdels.alias("p"),
             org.apache.spark.sql.functions.col(s"r.$PosFileCol") ===
               org.apache.spark.sql.functions.col("p.path") &&
@@ -1617,15 +1616,10 @@ final class SnapshotTable(val root: Path,
           // (one row per dirty file — the same bytes the broadcast
           // relation used to hold).
           val fn = org.apache.spark.sql.functions
-          val newest = dvRelevant.groupBy(_.version)
-            .map { case (dv, fs) =>
-              spark.read.parquet(fs.map(f =>
-                  root.resolve(f.path).toString): _*)
-                .select(fn.col("path").as("__graft_dv_path"),
-                  fn.col("dv").as("__graft_dv_blob"))
-                .withColumn(DelVerCol, fn.lit(dv))
-            }
-            .reduce(_ unionByName _)
+          val newest = deleteScan(spark, dvRelevant, StructType(Seq(
+              StructField("path", StringType), StructField("dv", BinaryType))))
+            .select(fn.col("path").as("__graft_dv_path"),
+              fn.col("dv").as("__graft_dv_blob"), fn.col(DelVerCol))
             .groupBy(fn.col("__graft_dv_path"))
             .agg(fn.max_by(fn.col("__graft_dv_blob"), fn.col(DelVerCol))
               .as("__graft_dv_blob"))
@@ -1633,17 +1627,14 @@ final class SnapshotTable(val root: Path,
           // the broadcast map holds EVERY pending vector on the driver
           // and every executor — O(total DV bytes), the component's
           // ceiling under dense delete debt. The pending bytes are
-          // driver-known (one Files.size stat per pending DV file — the
-          // relevant set is small; an unreadable size counts 0 and keeps
-          // the fast path), so past a configurable bound the read falls
-          // back to a DISTRIBUTED (path, pos) anti-join — the vectors
+          // driver-known (the sizes the delete scan above is planned
+          // with), so past a configurable bound the read falls back to
+          // a DISTRIBUTED (path, pos) anti-join — the vectors
           // explode into position rows executor-side, O(deleted
           // positions) shuffled, nothing table-sized ever collected.
           // Small debt (the common case) keeps the codegen'd zero-join
           // probe PlanShapeSpec pins.
-          val pendingDvBytes = dvRelevant.map(d =>
-            scala.util.Try(Files.size(root.resolve(d.path)))
-              .getOrElse(0L)).sum
+          val pendingDvBytes = dvRelevant.map(d => fileBytes(d.path)).sum
           val dvBroadcastMax = spark.conf
             .get("graft.read.dv.broadcast-max-bytes", "67108864").toLong
           if (pendingDvBytes <= dvBroadcastMax) {
@@ -1677,11 +1668,17 @@ final class SnapshotTable(val root: Path,
           // join-side filter. Only the delete files that can affect THIS
           // selection join — a partition-scoped read never unions the
           // other partitions' deletes.
-          val dels = eqRelevant.groupBy(_.version)
-            .map { case (v, fs) =>
-              spark.read.parquet(fs.map(f => root.resolve(f.path).toString): _*)
-                .withColumn(DelVerCol, lit(v))
-            }
+          // one scan per key SCHEMA, not per delete commit: every
+          // version's key columns come from one footer read of its
+          // first file (a widened key splits the schemas, and the union
+          // widens them back as the per-version union did)
+          val dels = eqRelevant.groupBy(_.version).toSeq
+            .groupBy { case (_, fs) =>
+              ManifestFileIndex.footerSchema(
+                root.resolve(fs.head.path).toString) }
+            .toSeq
+            .map { case (keySchema, vs) =>
+              deleteScan(spark, vs.flatMap(_._2), keySchema) }
             .reduce(_ unionByName _)
           val keyCols = dels.columns.filterNot(_ == DelVerCol).toSeq
           val cond = keyCols.map(c =>
@@ -1728,13 +1725,20 @@ final class SnapshotTable(val root: Path,
     }
   }
 
-  /** Read a set of manifest files, reconstructing hive partition columns
-    * via a per-commit-group basePath, optionally tagging rows with their
-    * file's sequence number for MoR delete resolution. Whether a group is
-    * hive-encoded is decided by ITS OWN partition map, not the current
-    * spec — after [[evolvePartitioning]] a manifest mixes layouts, and a
-    * legacy group read under the wrong assumption would null out (or
-    * double-bind) its path-encoded columns.
+  /** Read a set of manifest files through a [[ManifestFileIndex]]: the
+    * manifest is the file list (nothing is listed), each entry's length
+    * is its recorded `bytes`, and partition values come from its own
+    * partition map — after [[evolvePartitioning]] a manifest mixes
+    * layouts, so the FILE decides which columns its path encodes, never
+    * the current spec. The per-file sequence number (MoR delete
+    * resolution) and manifest path (position identity) are constant
+    * columns of the same index, not per-commit literals.
+    *
+    * Files are grouped only by PHYSICAL READ SHAPE: partition key set,
+    * the rename/widen epoch of the columns, and which declared initial
+    * defaults predate the file. One relation per shape; a steady-state
+    * table has exactly one, so a read is one scan whatever the number of
+    * commits behind it.
     */
   private def readFileGroup(spark: SparkSession, m: Manifest,
       schema: StructType, fs: Seq[FileEntry], withSeq: Boolean,
@@ -1747,132 +1751,107 @@ final class SnapshotTable(val root: Path,
     // inheritance), hence the forced flags below.
     val wantPos = withPos || withLineage
     val wantSeq = withSeq || withLineage
-    def withLin(st: StructType): StructType =
-      if (!withLineage) st
-      else StructType(st.fields ++ Seq(
-        org.apache.spark.sql.types.StructField(SnapshotTable.RowIdColName,
-          org.apache.spark.sql.types.LongType, nullable = true),
-        org.apache.spark.sql.types.StructField(SnapshotTable.LastSeqColName,
-          org.apache.spark.sql.types.LongType, nullable = true)))
-    // parquet `_metadata` is a per-scan hidden column — it must be
-    // projected BEFORE any union, so the position identity is attached
-    // inside each group's scan. The relative path is recovered from the
-    // scheme-qualified absolute path by its stable `data/v<N>/...` tail
-    // (every committed path starts there — the layout contract).
-    def posCols(df: DataFrame, adopted: Boolean = false): DataFrame =
-      if (!wantPos) df
-      else df
-        .withColumn(PosFileCol, org.apache.spark.sql.functions
-          .regexp_extract(org.apache.spark.sql.functions
-            // GREEDY leading .* anchors the group at the LAST
-            // `data/v<N>/` segment: a table ROOT containing one (e.g.
-            // /warehouse/data/v1/mytable) would otherwise match at the
-            // root's segment, and the recovered path would never equal
-            // the manifest's relative path — every position delete
-            // silently exonerated. ADOPTED files ([[addFiles]]) are
-            // recorded under their absolute path instead: strip the
-            // scan's URI scheme (`file:///x` → `/x`) — decided per
-            // GROUP, never per row, because an adopted absolute path
-            // may itself contain a `data/v<N>/` segment
-            .col("_metadata.file_path"),
-            if (adopted) "^[a-zA-Z][a-zA-Z0-9+.-]*:(?://)?(/.*)$"
-            else "^.*(data/v[0-9]+[a-z]?/.*)$", 1))
-        .withColumn(PosPosCol,
-          org.apache.spark.sql.functions.col("_metadata.row_index"))
+    val linFields =
+      if (!withLineage) Nil
+      else Seq(SnapshotTable.RowIdColName, SnapshotTable.LastSeqColName)
+        .map(StructField(_, LongType, nullable = true))
+    // position identity: the file's MANIFEST path (table-root-relative
+    // for internal files, absolute for adopted ones — exactly the key
+    // position deletes, deletion vectors and lineage inheritance use)
+    // plus the row's ordinal within it (parquet `_metadata.row_index`)
+    val constFields =
+      (if (wantSeq) Seq(StructField(SeqCol, LongType, nullable = false))
+       else Nil) ++
+      (if (wantPos) Seq(StructField(PosFileCol, StringType, nullable = false))
+       else Nil)
     val chains = evoChains(m)
     // declared column DEFAULTs (v3 initial-defaults): rows of files that
     // PREDATE a column's add-commit read the declared literal instead of
-    // NULL. Applied per GROUP (the group's sequence decides), after any
-    // rename/widen remap so the coalesce binds the CURRENT name; files
-    // written after the add carry the column physically, so their
-    // explicit NULLs stay NULL.
+    // NULL; files written after the add carry the column physically, so
+    // their explicit NULLs stay NULL
     val inits = SnapshotTable.initialDefaults(m)
-    def applyDefaults(df: DataFrame, seqNo: Long): DataFrame =
-      inits.foldLeft(df) { case (acc, (lc, (addV, litSql))) =>
-        if (seqNo >= addV) acc
-        else schema.fields.find(_.name.toLowerCase == lc) match {
-          case Some(f) => acc.withColumn(f.name,
-            org.apache.spark.sql.functions.coalesce(
-              org.apache.spark.sql.functions.col(f.name),
-              org.apache.spark.sql.functions.expr(litSql).cast(f.dataType)))
-          case None => acc // column since dropped: nothing to fill
-        }
-      }
+    val tz = spark.conf.get("spark.sql.session.timeZone")
     // rename/widen epochs: a pre-evolution file reads its columns under
     // the OLD physical (name, type) — selected by the file's sequence
-    // number — then aliases/casts to the current schema. Un-evolved
-    // tables take the single-scan fast paths unchanged.
-    def remap(df: DataFrame, seqNo: Long,
-              phys: Array[org.apache.spark.sql.types.StructField]): DataFrame = {
-      val mapped = schema.fields.zip(phys).map { case (cur, ph) =>
-        val c = org.apache.spark.sql.functions.col(ph.name)
-        (if (ph.dataType == cur.dataType) c else c.cast(cur.dataType))
-          .as(cur.name)
-      }
-      val extras =
-        ((if (wantPos) Seq(PosFileCol, PosPosCol) else Nil) ++
-          (if (withLineage)
-             Seq(SnapshotTable.RowIdColName, SnapshotTable.LastSeqColName)
-           else Nil))
-          .map(org.apache.spark.sql.functions.col)
-      df.select(mapped.toSeq ++ extras: _*)
-    }
-    def physFieldsAt(seqNo: Long) = schema.fields.map { f =>
-      val (n, t) = physAt(chains, f.name, f.dataType, seqNo)
-      org.apache.spark.sql.types.StructField(n, t, f.nullable, f.metadata)
-    }
-    if (fs.forall(f => f.partition.isEmpty && !isAdopted(f.path)) &&
-        !wantSeq && chains.isEmpty && inits.isEmpty)
-      posCols(spark.read.schema(withLin(schema))
-        .parquet(fs.map(f => root.resolve(f.path).toString): _*))
-    else
-      // grouped by (seq, hive base): one commit's files share a base
-      // (`data/v<N>` internal, the source dir for adopted absolute
-      // paths), but one ADOPTION may span several source dirs — basePath
-      // must be per-base, not per-seq
-      fs.groupBy(f => (f.seq, hiveBaseOf(f.path)))
-        .map { case ((seqNo, dir), g) =>
-          val phys = physFieldsAt(seqNo)
-          val evolved = !phys.sameElements(schema.fields)
-          val readSchema = withLin(if (evolved) StructType(phys) else schema)
-          val reader = spark.read.schema(readSchema)
-          val df0 = posCols(
-            (if (g.head.partition.isEmpty) reader
-             else reader.option("basePath", root.resolve(dir).toString))
-              .parquet(g.map(f => root.resolve(f.path).toString): _*),
-            adopted = isAdopted(g.head.path))
-          val df = applyDefaults(
-            if (evolved) remap(df0, seqNo, phys) else df0, seqNo)
-          if (wantSeq) df.withColumn(SeqCol, lit(seqNo)) else df
+    // number — then aliases/casts to the current schema
+    def shapeAt(seqNo: Long, keys: Set[String]) = (keys,
+      schema.fields.toSeq.map { f =>
+        val (n, t) = physAt(chains, f.name, f.dataType, seqNo)
+        StructField(n, t, f.nullable, f.metadata)
+      },
+      inits.collect { case (lc, (addV, litSql)) if seqNo < addV => lc -> litSql })
+    fs.groupBy(f => (f.seq, f.partition.keySet)).toSeq
+      .groupBy { case ((seqNo, keys), _) => shapeAt(seqNo, keys) }.toSeq
+      .map { case (shape, groups) => shape -> groups.flatMap(_._2) }
+      .sortBy(_._2.map(_.seq).min)
+      .map { case ((keys, phys, defaults), g) =>
+        val pkeys = keys.toSeq.sorted
+        val partFields = pkeys.map(k => phys.find(_.name.equalsIgnoreCase(k))
+          .getOrElse(StructField(k, StringType)))
+        val dataFields = phys.filterNot(p =>
+          keys.exists(_.equalsIgnoreCase(p.name))) ++ linFields
+        val entries = g.map { f =>
+          ManifestFileIndex.Entry(root.resolve(f.path).toString,
+            fileBytes(f.path, f.bytes),
+            pkeys.zip(partFields).map { case (k, pf) =>
+              ManifestFileIndex.partitionValue(f.partition(k), pf.dataType, tz)
+            } ++
+              (if (wantSeq) Seq(f.seq) else Nil) ++
+              (if (wantPos)
+                 Seq(org.apache.spark.unsafe.types.UTF8String.fromString(f.path))
+               else Nil))
         }
-        .reduce(_ unionByName _)
+        val df = ManifestFileIndex.scan(spark, entries,
+          StructType(dataFields), StructType(partFields ++ constFields))
+        val mapped = schema.fields.toSeq.zip(phys).map { case (cur, ph) =>
+          val c = col(ph.name)
+          val typed = if (ph.dataType == cur.dataType) c else c.cast(cur.dataType)
+          defaults.get(cur.name.toLowerCase)
+            .fold(typed)(litSql =>
+              coalesce(typed, expr(litSql).cast(cur.dataType)))
+            .as(cur.name)
+        }
+        df.select(mapped ++ linFields.map(f => col(f.name)) ++
+          constFields.map(f => col(f.name)) ++
+          (if (wantPos) Seq(col("_metadata.row_index").as(PosPosCol))
+           else Nil): _*)
+      }
+      .reduce(_ unionByName _)
   }
+
+  // files are immutable, so a size learned by one stat holds for the
+  // table's lifetime: entries recorded without `bytes` (and delete
+  // files, whose entries carry no size) are stat'ed once, not per read
+  private val statCache =
+    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
+
+  /** Length of a manifest-named file: its recorded size, else one stat. */
+  private def fileBytes(path: String, recorded: Long = -1L): Long =
+    if (recorded >= 0) recorded
+    else statCache.computeIfAbsent(path,
+      p => java.lang.Long.valueOf(Files.size(root.resolve(p))))
+
+  /** One scan over delete files read under `dataSchema`, each row tagged
+    * with its file's delete version in [[DelVerCol]] — a constant column
+    * of the index, so any number of delete commits is one relation.
+    */
+  private def deleteScan(spark: SparkSession, ds: Seq[DeleteEntry],
+                         dataSchema: StructType): DataFrame =
+    ManifestFileIndex.scan(spark,
+      ds.map(d => ManifestFileIndex.Entry(root.resolve(d.path).toString,
+        fileBytes(d.path), Seq(d.version))),
+      dataSchema,
+      StructType(Seq(StructField(DelVerCol, LongType, nullable = false))))
 
   /** An adopted file ([[addFiles]]): recorded under its ABSOLUTE path
     * (internal files are table-root-relative, `data/v<N>/...`).
     */
   private def isAdopted(path: String): Boolean = path.startsWith("/")
 
-  /** Base directory a hive-encoded group's partition dirs hang off: the
-    * path segments BEFORE the first `k=v` segment — `data/v<N>` for
-    * internal files (the writer layout), the adoption source dir for
-    * adopted absolute paths. Partition VALUES containing '=' are
-    * path-escaped by the writer (%3D), so the first '='-bearing segment
-    * is always the first partition dir; [[addFiles]] refuses source dirs
-    * whose own path contains one. Unpartitioned paths (no `k=v`) key on
-    * their parent dir — grouping only, basePath is unused for them.
-    */
-  private def hiveBaseOf(path: String): String = {
-    val segs = path.split('/')
-    val base = segs.takeWhile(!_.contains('='))
-    (if (base.length == segs.length) base.dropRight(1) else base)
-      .mkString("/")
-  }
-
   private val SeqCol = "__graft_seq"
   private val DelVerCol = "__graft_delete_version"
-  // row identity for position-delete resolution: the file's table-root-
-  // relative path + the row's ordinal within it (parquet `_metadata`)
+  // row identity for position-delete resolution: the file's manifest
+  // path + the row's ordinal within it (parquet `_metadata.row_index`)
   private val PosFileCol = "__graft_file"
   private val PosPosCol = "__graft_pos"
 
@@ -7305,6 +7284,14 @@ object SnapshotTable {
   }
 }
 
+/** A manifest or chunk document that is not the JSON the writer
+  * produces — truncated by a crash, garbled on disk, or missing a
+  * required field. Names the file; the parse failure is the cause.
+  */
+final class CorruptManifestException(val path: Path, cause: Throwable)
+    extends IllegalStateException(
+      s"corrupt table metadata file $path: ${cause.getMessage}", cause)
+
 /** Minimal JSON codec for manifests — flat structure, no external deps.
   *
   * Scalability: up to [[ManifestJson.ChunkThreshold]] file entries the
@@ -7584,23 +7571,36 @@ private[graft] object ManifestJson {
           .getOrElse(-1L))
     }
 
+  /** Parse one metadata document and decode it; any malformation — a
+    * parse error, a missing field, a wrong type — raises
+    * [[CorruptManifestException]] naming `p`.
+    */
+  private def parseDoc[T](p: Path)(decode: Map[String, Any] => T): T = {
+    val s = new String(Files.readAllBytes(p), StandardCharsets.UTF_8)
+    try decode(JsonLite.parse(s).asInstanceOf[Map[String, Any]])
+    catch {
+      case e: CorruptManifestException => throw e
+      case scala.util.control.NonFatal(e) =>
+        throw new CorruptManifestException(p, e)
+    }
+  }
+
   /** Chunk documents a manifest references (Nil for inline manifests or
     * missing files) — the reachability input for chunk GC. Reads both the
     * current `chunks` field and the pre-round-4 `fileChunks` name list.
     */
-  def chunkNames(p: Path): Seq[String] = {
-    if (!Files.exists(p)) return Nil
-    val s = new String(Files.readAllBytes(p), StandardCharsets.UTF_8)
-    val parsed = JsonLite.parse(s).asInstanceOf[Map[String, Any]]
-    val legacy = parsed.get("fileChunks")
-      .map(_.asInstanceOf[List[Any]].map(_.asInstanceOf[String]))
-      .getOrElse(Nil)
-    val current = parsed.get("chunks")
-      .map(_.asInstanceOf[List[Any]]
-        .map(c => c.asInstanceOf[Map[String, Any]]("name").asInstanceOf[String]))
-      .getOrElse(Nil)
-    legacy ++ current
-  }
+  def chunkNames(p: Path): Seq[String] =
+    if (!Files.exists(p)) Nil
+    else parseDoc(p) { parsed =>
+      val legacy = parsed.get("fileChunks")
+        .map(_.asInstanceOf[List[Any]].map(_.asInstanceOf[String]))
+        .getOrElse(Nil)
+      val current = parsed.get("chunks")
+        .map(_.asInstanceOf[List[Any]]
+          .map(c => c.asInstanceOf[Map[String, Any]]("name").asInstanceOf[String]))
+        .getOrElse(Nil)
+      legacy ++ current
+    }
 
   /** Parse one chunk document's file entries. Runs on the driver for
     * lazy [[FileList]] loads and on EXECUTORS for the distributed
@@ -7608,8 +7608,7 @@ private[graft] object ManifestJson {
     */
   def readChunkEntries(p: Path): Seq[FileEntry] = {
     chunkParses.incrementAndGet()
-    val cs = new String(Files.readAllBytes(p), StandardCharsets.UTF_8)
-    parseFiles(JsonLite.parse(cs).asInstanceOf[Map[String, Any]]("files"))
+    parseDoc(p)(parsed => parseFiles(parsed("files")))
   }
 
   private def parseChunkRef(v: Any): ChunkRef = {
@@ -7633,9 +7632,7 @@ private[graft] object ManifestJson {
   // hand-rolled parser for exactly the JSON `write` produces. Chunk
   // documents are NOT parsed here: the returned manifest's FileList loads
   // them lazily, and pruned paths never load the pruned ones at all.
-  def read(p: Path): Manifest = {
-    val s = new String(Files.readAllBytes(p), StandardCharsets.UTF_8)
-    val parsed = JsonLite.parse(s).asInstanceOf[Map[String, Any]]
+  def read(p: Path): Manifest = parseDoc(p) { parsed =>
     // pre-round-4 chunk format carried no rollups — load eagerly (the
     // next write re-chunks into the rollup format)
     val legacyChunked = parsed.get("fileChunks")
@@ -7692,64 +7689,85 @@ private[graft] object ManifestJson {
   * own manifests; avoids any external dependency (offline build).
   */
 private[graft] object JsonLite {
+  /** Parse one JSON document; malformed or truncated input raises
+    * `IllegalArgumentException` with the character offset.
+    */
   def parse(s: String): Any = {
     val it = new Cursor(s)
     val v = it.value()
-    it.ws()
+    it.end()
     v
   }
   private final class Cursor(s: String) {
     private var i = 0
     def ws(): Unit = while (i < s.length && s.charAt(i).isWhitespace) i += 1
+    def end(): Unit = {
+      ws(); require(i == s.length, s"unexpected trailing input at $i")
+    }
+    // bounds-checked read: truncated input fails HERE with its offset,
+    // never as an index exception from deep inside a value
+    private def at(j: Int): Char = {
+      require(j < s.length, s"unexpected end of input at $j")
+      s.charAt(j)
+    }
     private def expect(c: Char): Unit = {
-      ws(); require(i < s.length && s.charAt(i) == c, s"expected $c at $i"); i += 1
+      ws(); require(at(i) == c, s"expected $c at $i"); i += 1
+    }
+    private def literal(word: String, v: Any): Any = {
+      require(s.startsWith(word, i), s"expected $word at $i")
+      i += word.length
+      v
     }
     def value(): Any = {
       ws()
-      s.charAt(i) match {
+      at(i) match {
         case '{' => objValue()
         case '[' => arrValue()
         case '"' => strValue()
-        case 't' => i += 4; true
-        case 'f' => i += 5; false
-        case 'n' => i += 4; null
+        case 't' => literal("true", true)
+        case 'f' => literal("false", false)
+        case 'n' => literal("null", null)
         case _   => numValue()
       }
     }
     private def objValue(): Map[String, Any] = {
       expect('{'); ws()
       val b = Map.newBuilder[String, Any]
-      if (s.charAt(i) == '}') { i += 1; return b.result() }
+      if (at(i) == '}') { i += 1; return b.result() }
       var done = false
       while (!done) {
         ws(); val k = strValue(); expect(':'); val v = value(); b += (k -> v)
         ws()
-        if (s.charAt(i) == ',') i += 1 else { expect('}'); done = true }
+        if (at(i) == ',') i += 1 else { expect('}'); done = true }
       }
       b.result()
     }
     private def arrValue(): List[Any] = {
       expect('['); ws()
       val b = List.newBuilder[Any]
-      if (s.charAt(i) == ']') { i += 1; return b.result() }
+      if (at(i) == ']') { i += 1; return b.result() }
       var done = false
       while (!done) {
         b += value(); ws()
-        if (s.charAt(i) == ',') i += 1 else { expect(']'); done = true }
+        if (at(i) == ',') i += 1 else { expect(']'); done = true }
       }
       b.result()
     }
     private def strValue(): String = {
       expect('"')
       val sb = new StringBuilder
-      while (s.charAt(i) != '"') {
+      while (at(i) != '"') {
         if (s.charAt(i) == '\\') {
           i += 1
-          s.charAt(i) match {
+          at(i) match {
             case '"' => sb += '"'; case '\\' => sb += '\\'; case '/' => sb += '/'
             case 'n' => sb += '\n'; case 'r' => sb += '\r'; case 't' => sb += '\t'
             case 'b' => sb += '\b'; case 'f' => sb += '\f'
-            case 'u' => sb += Integer.parseInt(s.substring(i + 1, i + 5), 16).toChar; i += 4
+            case 'u' =>
+              require(i + 5 <= s.length, s"unexpected end of input at $i")
+              sb += Integer.parseInt(s.substring(i + 1, i + 5), 16).toChar; i += 4
+            case c => throw new IllegalArgumentException(
+              s"bad escape \\$c at $i")
           }
         } else sb += s.charAt(i)
         i += 1

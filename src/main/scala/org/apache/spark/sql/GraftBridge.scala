@@ -23,6 +23,13 @@ object GraftBridge {
   def catalystExpression(c: Column): Expression =
     classic.ColumnNodeToExpressionConverter(c.node)
 
+  /** `schema` with every field nullable, nested ones included — the
+    * data schema Spark's own file sources read under (a file may always
+    * lack a column, which then reads NULL).
+    */
+  def asNullable(schema: types.StructType): types.StructType =
+    schema.asNullable
+
   /** Register an expression builder for SQL usage. */
   def registerFunction(spark: SparkSession, name: String,
                        builder: Seq[Expression] => Expression): Unit =

@@ -67,7 +67,7 @@ class AdoptionSpec extends SparkSpec {
     t.addFiles(spark, ext)
     val got = t.read(spark)
     assert(got.count() == 150)
-    // partition column reconstructed via the adopted group's basePath
+    // partition column read from the adopted entries' partition maps
     assert(got.filter(col("p") === 1).count() ==
       (1 to 150).count(_ % 3 == 1))
     // partition-scoped manifest pruning covers adopted entries

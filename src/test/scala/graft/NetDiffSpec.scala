@@ -152,4 +152,24 @@ class NetDiffSpec extends SparkSpec {
     val e = intercept[IllegalArgumentException](NetDiff.diff(df, df))
     assert(e.getMessage.contains("VARIANT"))
   }
+
+  test("user columns named like the fingerprint temps diff exactly") {
+    // the fp pre-pass adds two temp columns; a user column of the same
+    // name (any casing) must neither be replaced nor leak fingerprints
+    val before = Seq((1L, 10L, 7L), (2L, 20L, 8L), (3L, 30L, 9L))
+      .toDF("k", "_graft_fp1", "_GRAFT_FP2")
+    val after = Seq((1L, 10L, 7L), (2L, 21L, 8L), (4L, 40L, 6L))
+      .toDF("k", "_graft_fp1", "_GRAFT_FP2")
+    assertSame(before, after)
+    val (ins, del) = NetDiff.diff(before, after)
+    assert(ins.columns.toSeq == Seq("k", "_graft_fp1", "_GRAFT_FP2"))
+    assert(ins.orderBy("k").collect().map(_.toSeq).toSeq ==
+      Seq(Seq(2L, 21L, 8L), Seq(4L, 40L, 6L)))
+    assert(del.orderBy("k").collect().map(_.toSeq).toSeq ==
+      Seq(Seq(2L, 20L, 8L), Seq(3L, 30L, 9L)))
+    val got = NetDiff.subtractAll(before, after)
+    assert(got.columns.toSeq == before.columns.toSeq)
+    assert(got.orderBy("k").collect().map(_.toSeq).toSeq ==
+      Seq(Seq(2L, 20L, 8L), Seq(3L, 30L, 9L)))
+  }
 }

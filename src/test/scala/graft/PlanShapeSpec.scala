@@ -291,4 +291,53 @@ class PlanShapeSpec extends SparkSpec {
         "fallback and broadcast paths must read identical rows")
     } finally spark.conf.unset("graft.read.dv.broadcast-max-bytes")
   }
+
+  private def fileScans(plan: String): Int =
+    "FileScan parquet".r.findAllMatchIn(plan).size
+
+  test("a partitioned table after many commits reads with ONE scan, " +
+      "planned from the manifest") {
+    val root = java.nio.file.Files
+      .createTempDirectory("graft-planshape-1scan-").toString
+    val t = graft.table.SnapshotTable.at(root)
+    def batch(k: Int) = (k * 100 until k * 100 + 50)
+      .map(i => (i.toLong, i % 5)).toDF("id", "p")
+    t.createOrReplace(batch(0), Seq("p"))
+    (1 to 5).foreach(k => t.append(spark, batch(k)))
+    val df = t.read(spark)
+    val plan = df.queryExecution.executedPlan.toString()
+    assert(fileScans(plan) == 1,
+      s"six commits must read as one scan:\n${plan.take(3000)}")
+    assert(!plan.contains("InMemoryFileIndex") &&
+      plan.contains("ManifestFileIndex"),
+      s"the scan must be planned from the manifest:\n${plan.take(3000)}")
+    assert(!plan.contains("Union"), plan.take(3000))
+    assert(df.count() == 300L)
+  }
+
+  test("a MoR read with deletes pending from three commits plans at most " +
+      "three scans") {
+    val root = java.nio.file.Files
+      .createTempDirectory("graft-planshape-mor-").toString
+    val t = graft.table.SnapshotTable.at(root)
+    t.createOrReplace((1 to 300).map(i => (i.toLong, i % 3, s"v$i"))
+      .toDF("id", "p", "s"), Seq("p"))
+    (1 to 3).foreach { k =>
+      t.mergeMoR(spark,
+        Seq((k.toLong, k % 3, s"u$k", "U"), (1000L + k, 0, s"i$k", "I"))
+          .toDF("id", "p", "s", "op"),
+        Seq("id"), keepDeletes = false)
+    }
+    val m = t.currentManifest
+    assert(m.deleteFiles.map(_.version).distinct.size == 3,
+      "deletes must be pending from three commits")
+    val df = t.read(spark)
+    val plan = df.queryExecution.executedPlan.toString()
+    val n = fileScans(plan)
+    assert(n <= 3, s"MoR read planned $n scans:\n${plan.take(4000)}")
+    assert(!plan.contains("InMemoryFileIndex"), plan.take(4000))
+    assert(df.count() == 303L)
+    assert(df.filter(col("id") <= 3L).orderBy("id").select("s")
+      .as[String].collect().toSeq == Seq("u1", "u2", "u3"))
+  }
 }
