@@ -250,14 +250,19 @@ object Similarity {
   def trainPqCodebooks(embeddings: DataFrame, idCol: String, vecCol: String,
                        m: Int, k: Int, iters: Int): DataFrame = {
     val unit = normalized(embeddings, idCol, vecCol)
-    // ONE action probes dim AND the sample-sizing count (r15: they were
-    // two separate jobs — each Spark action pays its own planning/AQE
-    // constant). min(size) over the normalized rows equals the old
-    // first-row probe on every fixed-dim corpus; an empty/all-zero
-    // corpus reads dim 0 and falls through to empty books like before.
-    val probe = unit.agg(count(lit(1)), min(size(col("v")))).head
+    // ONE action probes the dim range AND the sample-sizing count (each
+    // Spark action pays its own planning/AQE constant). An empty or
+    // all-zero corpus and a ragged one fail loudly: books trained on
+    // nothing, or sliced by one row's dim, would be silently wrong.
+    // (Zero-length vectors have norm 0 and never survive `normalized`,
+    // so a non-empty corpus has dim > 0.)
+    val probe = unit.agg(count(lit(1)), min(size(col("v"))),
+      max(size(col("v")))).head
     val n = probe.getLong(0)
-    val dim = if (probe.isNullAt(1)) 0 else probe.getInt(1)
+    require(n > 0, "PQ training needs a non-empty corpus of non-zero vectors")
+    val dim = probe.getInt(1)
+    require(probe.getInt(2) == dim,
+      s"PQ training needs one vector dimension, got $dim to ${probe.getInt(2)}")
     require(dim % m == 0, s"dim $dim must divide into $m equal blocks")
     val blockLen = dim / m
     // ONE blocked Lloyd for all m quantizers: `block` rides the key

@@ -136,12 +136,13 @@ object NetDiff {
     * ONE ±1-netting aggregation of [[netted]] (two `exceptAll`s would
     * each union both sides and aggregate — the same pass twice).
     * Schemas must already align (same columns, same order), as
-    * exceptAll requires.
+    * exceptAll requires. `prepass` as in [[netted]].
     */
-  def diff(before: DataFrame, after: DataFrame): (DataFrame, DataFrame) = {
+  def diff(before: DataFrame, after: DataFrame,
+           prepass: Boolean = true): (DataFrame, DataFrame) = {
     // both legs reference the netting aggregate → cache it (changed-row
     // volume; registered for release like every step cache)
-    val n = reg(netted(before, after).cache())
+    val n = reg(netted(before, after, prepass).cache())
     val net = col(NetCol)
     def leg(keep: Column, mult: Column): DataFrame =
       n.filter(keep)
@@ -158,8 +159,20 @@ object NetDiff {
     * changelog's update pairing) read it directly and skip the
     * replication explode entirely. Uncached: single-reference consumers
     * pay one pass; [[diff]] caches its own copy.
+    *
+    * `prepass = false` skips the fingerprint pre-pass and nets with the
+    * ±1 aggregation alone. The changelog steps use it: counting
+    * fingerprints first reads each side twice, which costs more than
+    * the full-row shuffle it saves — on a change-sized merge-on-read
+    * step, and on copy-on-write rewrite steps as well. Without the
+    * pre-pass, `clusterBy` names the columns the consumer partitions by
+    * (the keyed changelog's key window): the tagged union shuffles once
+    * by them, and both the aggregation and the window reuse that
+    * partitioning instead of shuffling twice.
     */
-  def netted(before: DataFrame, after: DataFrame): DataFrame = {
+  def netted(before: DataFrame, after: DataFrame,
+             prepass: Boolean = true,
+             clusterBy: Seq[String] = Nil): DataFrame = {
     val schema = before.schema
     val variantCols = schema.fields.filter(f => hasVariant(f.dataType))
     require(variantCols.isEmpty,
@@ -168,14 +181,16 @@ object NetDiff {
         "meaningless. Project them away (or cast to a comparable type) first.")
     require(!schema.fieldNames.contains(NetCol),
       s"NetDiff: input already carries a $NetCol column")
+    val net: (DataFrame, DataFrame) => DataFrame =
+      if (prepass) nettedHashable else signedNet(_, _, clusterBy)
     if (schema.fields.exists(f => hasMap(f.dataType))) {
       def canonDf(df: DataFrame): DataFrame =
         df.select(schema.fields.toSeq.map(f =>
           canon(col(f.name), f.dataType).as(f.name)): _*)
-      val n = nettedHashable(canonDf(before), canonDf(after))
+      val n = net(canonDf(before), canonDf(after))
       n.select(schema.fields.toSeq.map(f =>
         restore(col(f.name), f.dataType).as(f.name)) :+ col(NetCol): _*)
-    } else nettedHashable(before, after)
+    } else net(before, after)
   }
 
   /** The two fingerprint column names, chosen so neither matches an
@@ -262,11 +277,23 @@ object NetDiff {
       .filter(coalesce(col("ca"), lit(0L)) =!= coalesce(col("cb"), lit(0L)))
       .select(fp1, fp2)
       .cache())
-    def survivors(df: DataFrame, tag: Int): DataFrame =
+    def survivors(df: DataFrame): DataFrame =
       df.join(changed, Seq(fp1, fp2), "left_semi")
-        .select(outCols.map(col) :+ lit(tag.toLong).as(NetCol): _*)
-    survivors(af, 1).unionByName(survivors(bf, -1))
-      .groupBy(outCols.map(col): _*)
+        .select(outCols.map(col): _*)
+    signedNet(survivors(bf), survivors(af))
+  }
+
+  /** The ±1 netting aggregation itself: `after` rows count +1, `before`
+    * rows −1, group by every column, keep non-zero sums. Map-free inputs.
+    */
+  private def signedNet(before: DataFrame, after: DataFrame,
+                        clusterBy: Seq[String] = Nil): DataFrame = {
+    val outCols = before.columns.toSeq.map(col)
+    def tagged(df: DataFrame, tag: Long): DataFrame =
+      df.select(outCols :+ lit(tag).as(NetCol): _*)
+    val both = tagged(after, 1L).unionByName(tagged(before, -1L))
+    (if (clusterBy.isEmpty) both else both.repartition(clusterBy.map(col): _*))
+      .groupBy(outCols: _*)
       .agg(sum(NetCol).as(NetCol))
       .filter(col(NetCol) =!= 0L)
   }

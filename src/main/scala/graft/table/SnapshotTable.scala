@@ -1671,23 +1671,27 @@ final class SnapshotTable(val root: Path,
           // one scan per key SCHEMA, not per delete commit: every
           // version's key columns come from one footer read of its
           // first file (a widened key splits the schemas, and the union
-          // widens them back as the per-version union did)
-          val dels = eqRelevant.groupBy(_.version).toSeq
-            .groupBy { case (_, fs) =>
-              ManifestFileIndex.footerSchema(
-                root.resolve(fs.head.path).toString) }
-            .toSeq
-            .map { case (keySchema, vs) =>
-              deleteScan(spark, vs.flatMap(_._2), keySchema) }
-            .reduce(_ unionByName _)
-          val keyCols = dels.columns.filterNot(_ == DelVerCol).toSeq
-          val cond = keyCols.map(c =>
-            org.apache.spark.sql.functions.col(s"r.$c") ===
-              org.apache.spark.sql.functions.col(s"d.$c"))
-            .reduce(_ && _) &&
-            org.apache.spark.sql.functions.col(s"d.$DelVerCol") >
-              org.apache.spark.sql.functions.col(s"r.$SeqCol")
-          base = base.alias("r").join(dels.alias("d"), cond, "left_anti")
+          // widens them back as the per-version union did). Merges on
+          // different key SETS mask on their own columns: one anti-join
+          // per set, each removing what its deletes name.
+          eqRelevant.groupBy(_.version).toSeq
+            .groupBy { case (_, fs) => deleteKeySchema(fs.head) }.toSeq
+            .groupBy { case (keySchema, _) =>
+              keySchema.fieldNames.map(_.toLowerCase).sorted.mkString(",") }
+            .toSeq.sortBy(_._1)
+            .foreach { case (_, schemas) =>
+              val dels = schemas.map { case (keySchema, vs) =>
+                  deleteScan(spark, vs.flatMap(_._2), keySchema) }
+                .reduce(_ unionByName _)
+              val keyCols = dels.columns.filterNot(_ == DelVerCol).toSeq
+              val cond = keyCols.map(c =>
+                org.apache.spark.sql.functions.col(s"r.$c") ===
+                  org.apache.spark.sql.functions.col(s"d.$c"))
+                .reduce(_ && _) &&
+                org.apache.spark.sql.functions.col(s"d.$DelVerCol") >
+                  org.apache.spark.sql.functions.col(s"r.$SeqCol")
+              base = base.alias("r").join(dels.alias("d"), cond, "left_anti")
+            }
         }
         Some(base.select(cols: _*))
       }
@@ -1830,6 +1834,17 @@ final class SnapshotTable(val root: Path,
     if (recorded >= 0) recorded
     else statCache.computeIfAbsent(path,
       p => java.lang.Long.valueOf(Files.size(root.resolve(p))))
+
+  // delete files are immutable as well: an equality delete's key schema
+  // comes from one footer read per file for the table's lifetime, not
+  // one per MoR read or changelog step
+  private val keySchemaCache =
+    new java.util.concurrent.ConcurrentHashMap[String, StructType]()
+
+  /** The key columns an equality-delete file was written with. */
+  private def deleteKeySchema(d: DeleteEntry): StructType =
+    keySchemaCache.computeIfAbsent(d.path,
+      p => ManifestFileIndex.footerSchema(root.resolve(p).toString))
 
   /** One scan over delete files read under `dataSchema`, each row tagged
     * with its file's delete version in [[DelVerCol]] — a constant column
@@ -2493,9 +2508,8 @@ final class SnapshotTable(val root: Path,
     *    files a NEW delete file may mask, resolved as of v-1; `after` =
     *    the added files plus those same carried files, resolved as of v;
     *    inserts = after \ before, deletes = before \ after (multiset
-    *    semantics via [[NetDiff.diff]] — a fingerprint pre-pass bounds
-    *    the shuffle to changed-row volume instead of hashing full wide
-    *    rows). A CoW merge that rewrites a partition
+    *    semantics via ONE ±1 aggregation of [[NetDiff.netted]]). A
+    *    CoW merge that rewrites a partition
     *    wholesale therefore emits only the rows that actually changed —
     *    Iceberg's net_changes semantics — at a shuffle bounded by the
     *    touched files, never the table.
@@ -2762,6 +2776,59 @@ final class SnapshotTable(val root: Path,
         col("__graft_cl.m").as(ChangelogCols(2))): _*)
   }
 
+  /** The change-sized restriction of a merge-on-read changelog step that
+    * removes no data files, keeps every delete file of `prevM` live, and
+    * adds only EQUALITY deletes — None for any other step (rewrites,
+    * positional deletes and DVs, dropped deletes), which keeps the
+    * general path.
+    *
+    * Between the two boundaries a row of a carried file can change
+    * visibility only if a new equality delete names its key; every
+    * other row has the same multiplicity on both sides and nets to
+    * zero. So both boundaries' dirty spans may be cut to the rows whose
+    * (aligned) key matches a key of the new delete files: a semi-join
+    * against their keys (the planner broadcasts them when small).
+    * NULL keys drop, exactly as the `===` mask never hits them; ignoring
+    * partition scope and the sequence guard only keeps a superset of
+    * the changed rows, which nets the same.
+    *
+    * Delete key columns carry the names and types of their own commit:
+    * they map onto the target schema through the evolution chains and
+    * cast to its types, so key schemas that differ only by a widen share
+    * one key set. Genuinely different key sets (deletes of merges on
+    * different keys inside one net-collapsed step) keep the general
+    * path: a union of semi-joins would duplicate rows hit by both.
+    * A step whose initial defaults changed keeps the general path too:
+    * the same row would read differently at the two boundaries.
+    */
+  private def morStepRestriction(spark: SparkSession, prevM: Manifest,
+      curM: Manifest, newDeletes: Seq[DeleteEntry], target: StructType,
+      chains: Map[String, Seq[(Long, String, DataType)]])
+      : Option[DataFrame => DataFrame] = {
+    import org.apache.spark.sql.functions.col
+    val curDelPaths = curM.deleteFiles.map(_.path).toSet
+    if (newDeletes.isEmpty || newDeletes.exists(_.positional) ||
+        !prevM.deleteFiles.forall(d => curDelPaths(d.path)) ||
+        SnapshotTable.initialDefaults(prevM) !=
+          SnapshotTable.initialDefaults(curM)) return None
+    // per delete version: each footer key column with its target field
+    val perVersion = newDeletes.groupBy(_.version).toSeq.map { case (ver, ds) =>
+      val keySchema = deleteKeySchema(ds.head)
+      (ds, keySchema, keySchema.fieldNames.toSeq.flatMap(k =>
+        target.fields.find(f => physAt(chains, f.name, f.dataType, ver)._1
+          .equalsIgnoreCase(k)).map(k -> _)))
+    }
+    val keySets = perVersion.map { case (_, _, ts) => ts.map(_._2.name).sorted }
+    if (perVersion.exists { case (_, ks, ts) => ts.size != ks.size } ||
+        keySets.distinct.size != 1) return None
+    val keysDf = perVersion.map { case (ds, keySchema, ts) =>
+      deleteScan(spark, ds, keySchema).select(ts.map { case (k, f) =>
+        col(k).cast(f.dataType).as(f.name) }: _*)
+    }.reduce(_ unionByName _)
+    // a semi-join never duplicates, so repeated keys need no distinct
+    Some(_.join(keysDf, keySets.head, "left_semi"))
+  }
+
   def readChangelog(spark: SparkSession, fromVersion: Long,
                     toVersion: Long,
                     keys: Seq[String] = Nil): DataFrame = {
@@ -2816,12 +2883,31 @@ final class SnapshotTable(val root: Path,
           else Some(tag(align(
             readManifest(spark, curM.copy(files = fAdd)), v), "insert", v, ts))
         } else {
-          val before = align(readManifest(spark,
-            prevOpt.get.copy(files = fRem ++ dirty)), prevOpt.get.version)
-          val after = align(readManifest(spark,
-            curM.copy(files = fAdd ++ dirty)), v)
+          val prevM = prevOpt.get
+          val restriction = if (fRem.nonEmpty) None
+            else morStepRestriction(spark, prevM, curM, newDeletes, target,
+              chains)
+          val (before, after) = restriction match {
+            case Some(restrict) =>
+              // change-sized MoR step: the dirty span on both boundaries
+              // through the new deletes' keys, the added files whole
+              val dirtyAfter =
+                restrict(align(readManifest(spark, curM.copy(files = dirty)), v))
+              (restrict(align(readManifest(spark,
+                  prevM.copy(files = dirty)), prevM.version)),
+                if (fAdd.isEmpty) dirtyAfter
+                else align(readManifest(spark, curM.copy(files = fAdd)), v)
+                  .unionByName(dirtyAfter))
+            case None =>
+              (align(readManifest(spark,
+                  prevM.copy(files = fRem ++ dirty)), prevM.version),
+                align(readManifest(spark, curM.copy(files = fAdd ++ dirty)), v))
+          }
+          // no fingerprint pre-pass on any step: it reads each side
+          // twice, which costs more than the full-row shuffle it saves
+          // on rewrite steps too, not only on the change-sized MoR step
           if (keys.isEmpty) {
-            val (ins, del) = NetDiff.diff(before, after)
+            val (ins, del) = NetDiff.diff(before, after, prepass = false)
             Some(tag(ins, "insert", v, ts)
               .unionByName(tag(del, "delete", v, ts)))
           } else {
@@ -2835,7 +2921,8 @@ final class SnapshotTable(val root: Path,
             // insert/delete regardless of what else its window
             // partition (which GROUPS nulls together) holds.
             import org.apache.spark.sql.expressions.Window
-            val netted = NetDiff.netted(before, after)
+            val netted = NetDiff.netted(before, after, prepass = false,
+              clusterBy = keys)
             val net = col(NetDiff.NetCol)
             val w = Window.partitionBy(keys.map(col): _*)
             val hasIns = max(when(net > 0, 1).otherwise(0)).over(w)

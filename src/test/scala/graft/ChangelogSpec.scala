@@ -159,8 +159,6 @@ class ChangelogSpec extends SparkSpec {
     assert(byType("delete") == Set((None, "x")))
     // structural pin: the keyed step classifies via a Window over the
     // netted rows — no anti/semi join on the identifier keys remains
-    // (the only joins left are the fingerprint pre-pass semi joins and
-    // the changed-set full outer)
     val plan = cl.queryExecution.executedPlan.toString
     assert(plan.contains("Window"), "keyed pairing must be a window pass")
     assert(!plan.contains("LeftAnti"),

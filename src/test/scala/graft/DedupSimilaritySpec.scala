@@ -174,6 +174,23 @@ class DedupSimilaritySpec extends SparkSpec {
     assert(codes.count() == emb.count())
   }
 
+  test("PQ training refuses an empty corpus and ragged dimensions") {
+    def train(vs: Seq[(Long, Array[Float])]) =
+      Similarity.trainPqCodebooks(vs.toDF("id", "embedding"), "id",
+        "embedding", m = 2, k = 2, iters = 1)
+    val empty = intercept[IllegalArgumentException] { train(Nil) }
+    assert(empty.getMessage.contains("non-empty corpus"), empty.getMessage)
+    // all-zero vectors normalize away: as empty as no rows at all
+    assert(intercept[IllegalArgumentException] {
+      train(Seq((1L, Array(0f, 0f))))
+    }.getMessage.contains("non-empty corpus"))
+    val ragged = intercept[IllegalArgumentException] {
+      train(Seq((1L, Array(1f, 0f)), (2L, Array(0f, 1f, 0f, 1f))))
+    }
+    assert(ragged.getMessage.contains("one vector dimension"),
+      ragged.getMessage)
+  }
+
   test("SQ8 ANN: near-lossless recall, byte-per-dim codes, clamped " +
       "encode, dimension mismatch throws") {
     val emb = spark.read.parquet(sf() + "/embeddings.parquet")

@@ -340,4 +340,76 @@ class PlanShapeSpec extends SparkSpec {
     assert(df.filter(col("id") <= 3L).orderBy("id").select("s")
       .as[String].collect().toSeq == Seq("u1", "u2", "u3"))
   }
+
+  /** Every scan in `plan` (cached subplans inlined) as (input files,
+    * sits on the probe side of a LeftSemi join), plus each LeftSemi
+    * join's build-side input files.
+    */
+  private def semiScans(root: org.apache.spark.sql.catalyst.plans.logical
+      .LogicalPlan): (Seq[(Seq[String], Boolean)], Seq[Seq[String]]) = {
+    import org.apache.spark.sql.catalyst.plans.LeftSemi
+    import org.apache.spark.sql.catalyst.plans.logical.{Join, LogicalPlan}
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation,
+      LogicalRelation}
+    def inline(p: LogicalPlan): LogicalPlan = p.transformDown {
+      case m: InMemoryRelation => inline(m.cacheBuilder.logicalPlan)
+    }
+    val plan = inline(root)
+    def scanned(r: LogicalRelation): Seq[String] = r.relation match {
+      case h: HadoopFsRelation => h.location.inputFiles.toSeq
+      case _ => Nil
+    }
+    def files(p: LogicalPlan): Seq[String] =
+      p.collect { case r: LogicalRelation => scanned(r) }.flatten
+    def walk(p: LogicalPlan, under: Boolean): Seq[(Seq[String], Boolean)] =
+      p match {
+        case j: Join if j.joinType == LeftSemi =>
+          walk(j.left, true) ++ walk(j.right, under)
+        case r: LogicalRelation => Seq((scanned(r), under))
+        case other => other.children.flatMap(walk(_, under))
+      }
+    (walk(plan, false), plan.collect {
+      case j: Join if j.joinType == LeftSemi => files(j.right)
+    })
+  }
+
+  test("a MoR changelog step reads its dirty files only through the new " +
+      "delete keys, with no fingerprint pre-pass") {
+    val root = java.nio.file.Files
+      .createTempDirectory("graft-planshape-morcl-").toString
+    val t = graft.table.SnapshotTable.at(root)
+    t.createOrReplace((1 to 300).map(i => (i.toLong, i % 3, s"v$i"))
+      .toDF("id", "p", "s"), Seq("p"))
+    t.mergeMoR(spark,
+      Seq((5L, 2, "u5", "U"), (1000L, 0, "i", "I"), (7L, 1, "x", "D"))
+        .toDF("id", "p", "s", "op"),
+      Seq("id"), keepDeletes = false)
+    val dirty = t.manifest(1L).files.map(_.path)
+    val newDeletes = t.manifest(2L).deleteFiles.map(_.path)
+    assert(newDeletes.nonEmpty)
+    for (keys <- Seq(Seq("id"), Nil)) {
+      val cl = t.readChangelog(spark, 1L, 2L, keys)
+      val plan = cl.queryExecution.optimizedPlan
+      assert(!plan.toString.contains("xxhash64"),
+        s"a MoR step must not plan the fingerprint pre-pass:\n$plan")
+      val (scans, builds) = semiScans(plan)
+      val dirtyScans = scans.filter(_._1.exists(f => dirty.exists(f.endsWith)))
+      // (the keyless legs share one cached net, inlined once per leg)
+      assert(dirtyScans.size >= 2 && dirtyScans.forall(_._2),
+        s"both boundaries' dirty spans must sit under a LeftSemi join:\n$plan")
+      assert(builds.nonEmpty && builds.forall(fs => fs.nonEmpty &&
+        fs.forall(f => newDeletes.exists(f.endsWith))),
+        s"each LeftSemi must build on the new delete files' keys:\n$plan")
+      if (keys.nonEmpty) {
+        // the net and the key window share ONE shuffle by the keys; the
+        // delete keys broadcast raw (a semi-join needs no distinct)
+        val initial = cl.queryExecution.executedPlan.toString
+        val shuffles = "(?<!Broadcast)Exchange ".r.findAllIn(initial).size
+        assert(shuffles == 1, s"keyed MoR step planned $shuffles shuffles:\n$initial")
+      }
+      // 5 updated (two images or two legs), 1000 inserted, 7 deleted
+      assert(cl.count() == 4L)
+    }
+  }
 }
